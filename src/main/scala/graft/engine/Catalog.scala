@@ -58,11 +58,8 @@ object Catalog {
     val v = if (version >= 0) version else headVersion(spark, catRoot)
     require(v > 0, s"no catalog snapshot committed at $catRoot yet")
     val p = manifestPath(catRoot, v)
-    val f = fs(spark, catRoot)
-    require(f.exists(p), s"catalog snapshot $v does not exist at $catRoot")
-    val in = f.open(p)
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    parse(text)
+    require(fs(spark, catRoot).exists(p), s"catalog snapshot $v does not exist at $catRoot")
+    ManifestCodec.parseCatalog(Snapshots.readText(spark, catRoot, p), p.toString)
   }
 
   /** Pin the catalog as of wall-clock `tsMillis`: the newest catalog
@@ -178,46 +175,7 @@ object Catalog {
     val target = manifestPath(catRoot, m.version)
     val tmp = new Path(s"$catRoot/$CatDir/.tmp-${java.util.UUID.randomUUID()}")
     val out = f.create(tmp, /*overwrite=*/ true)
-    try out.write(render(m).getBytes("UTF-8")) finally out.close()
+    try out.write(ManifestCodec.renderCatalog(m).getBytes("UTF-8")) finally out.close()
     try Snapshots.atomicNoReplace(f, tmp, target) finally f.delete(tmp, false)
-  }
-
-  private def render(m: CatManifest): String = {
-    val tables = m.tables.toSeq.sortBy(_._1).map { case (n, (root, v)) =>
-      s"""{"name":${graft.JsonStr(n)},"root":${graft.JsonStr(root)},"v":$v}"""
-    }.mkString("[", ",", "]")
-    s"""{"version":${m.version},"parent":${m.parent},"ts":${m.ts},"tables":$tables}"""
-  }
-
-  private def parse(text: String): CatManifest = {
-    def longField(key: String): Long =
-      s""""$key":(-?\\d+)""".r.findFirstMatchIn(text)
-        .map(_.group(1).toLong)
-        .getOrElse(sys.error(s"bad catalog manifest: missing $key in $text"))
-    val entry =
-      """\{"name":"((?:[^"\\]|\\.)*)","root":"((?:[^"\\]|\\.)*)","v":(\d+)\}""".r
-    val tables = entry.findAllMatchIn(text).map { g =>
-      unescape(g.group(1)) -> (unescape(g.group(2)), g.group(3).toLong)
-    }.toMap
-    CatManifest(longField("version"), longField("parent"), longField("ts"), tables)
-  }
-
-  private def unescape(s: String): String = {
-    val sb = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case 'n' => sb.append('\n'); i += 2
-          case 't' => sb.append('\t'); i += 2
-          case 'r' => sb.append('\r'); i += 2
-          case 'u' =>
-            sb.append(Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar); i += 6
-          case other => sb.append(other); i += 2
-        }
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
   }
 }

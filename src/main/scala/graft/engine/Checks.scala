@@ -78,9 +78,9 @@ object Checks {
     val n = f.listStatus(dir).toSeq
       .flatMap(st => FileRe.findFirstMatchIn(st.getPath.getName).map(_.group(1).toLong))
       .maxOption.getOrElse(0L)
-    if (n == 0) (0L, Seq.empty)
-    else (n, parseRules(Snapshots.readText(spark, root,
-      new Path(s"${checksDir(root)}/checks-$n.json"))))
+    if (n == 0) return (0L, Seq.empty)
+    val p = new Path(s"${checksDir(root)}/checks-$n.json")
+    (n, ManifestCodec.parseRules(Snapshots.readText(spark, root, p), p.toString))
   }
 
   /** The table's current rule set (empty when unconstrained). */
@@ -270,23 +270,11 @@ object Checks {
       fsys.mkdirs(new Path(checksDir(root)))
       val tmp = new Path(s"${checksDir(root)}/.tmp-${java.util.UUID.randomUUID()}")
       val out = fsys.create(tmp, /*overwrite=*/ true)
-      try out.write(render(next).getBytes("UTF-8")) finally out.close()
+      try out.write(ManifestCodec.renderRules(next).getBytes("UTF-8")) finally out.close()
       val target = new Path(s"${checksDir(root)}/checks-${n + 1}.json")
       done = try Snapshots.atomicNoReplace(fsys, tmp, target)
         finally fsys.delete(tmp, false)
       // lost the race: another writer published n+1 — re-read, re-apply
     }
-  }
-
-  private def render(rules: Seq[Rule]): String =
-    rules.map(r =>
-      s"""{"name":${graft.JsonStr(r.name)},"expr":${graft.JsonStr(r.exprSql)}}""")
-      .mkString("[", ",", "]")
-
-  private def parseRules(text: String): Seq[Rule] = {
-    val str = """"([^"\\]*(?:\\.[^"\\]*)*)""""
-    (s"""\\{"name":$str,"expr":$str\\}""").r.findAllMatchIn(text)
-      .map(m => Rule(Snapshots.unescape(m.group(1)), Snapshots.unescape(m.group(2))))
-      .toSeq
   }
 }

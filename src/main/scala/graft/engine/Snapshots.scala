@@ -283,15 +283,11 @@ object Snapshots {
     * a file list + that list's ColStats) instead of inlining them. A plain
     * append therefore writes O(batch) metadata — one new shard with the
     * batch's files, plus a manifest whose size is O(#shards), ~40 bytes a
-    * ref — where the inline layout rewrote every file URI AND every
-    * ColStats of the whole table on each commit (O(table), the ~100 MB
-    * driver-side json at 1M files that motivated this split). Shards are
-    * shared across versions by reference: carried forward untouched on
-    * append, filtered (metadata-only rewrite of the AFFECTED shards) on
-    * merge/delete, and reclaimed by vacuum when no retained manifest
-    * references them. `inline` carries a pre-shard manifest's content so
-    * old tables stay readable; the next commit on top of one materializes
-    * it into a real shard. */
+    * ref — never O(table), ~100 MB of driver-side json at 1M files.
+    * Shards are shared across versions by reference: carried forward
+    * untouched on append, filtered (metadata-only rewrite of the AFFECTED
+    * shards) on merge/delete, and reclaimed by vacuum when no retained
+    * manifest references them. */
   final case class ManifestMeta(
       version: Long,
       parent: Long,
@@ -300,7 +296,6 @@ object Snapshots {
       ts: Long = 0L,
       schema: String = "",
       retired: Seq[String] = Seq.empty,
-      inline: Option[(Seq[String], Seq[ColStats])] = None,
       clustering: Option[Clustering] = None,
       /** Advisory index declaration: the PHYSICAL (stats, bloom) column
         * names new appends should index under — carried commit-to-commit
@@ -313,7 +308,7 @@ object Snapshots {
       indexed: Option[(Seq[String], Seq[String])] = None)
 
   /** A loaded shard: its ref plus the content. */
-  private final case class Shard(ref: ShardRef, files: Seq[String], stats: Seq[ColStats],
+  private[engine] final case class Shard(ref: ShardRef, files: Seq[String], stats: Seq[ColStats],
       rows: Seq[FileRows] = Seq.empty, blooms: Seq[FileBloom] = Seq.empty,
       dvs: Seq[FileDv] = Seq.empty,
       // false for shard generations whose TIMESTAMP stats predate the
@@ -417,7 +412,7 @@ object Snapshots {
     val p = manifestPath(root, v)
     require(fs(spark, root).exists(p),
       s"snapshot $v does not exist at $root (vacuumed or never committed)")
-    parseManifestMeta(readText(spark, root, p))
+    ManifestCodec.parseManifest(readText(spark, root, p), p.toString)
   }
 
   // shards are SHARED across the table's chains — always in the main dir
@@ -457,9 +452,8 @@ object Snapshots {
 
   private def loadShard(spark: SparkSession, root: String, ref: ShardRef): Shard =
     ShardCache.get(root, ref.name).getOrElse {
-      val (files, stats, rows, blooms, dvs, tsExact) =
-        parseShard(readText(spark, root, shardPath(root, ref.name)))
-      val sh = Shard(ref, files, stats, rows, blooms, dvs, tsExact)
+      val p = shardPath(root, ref.name)
+      val sh = ManifestCodec.parseShard(ref, readText(spark, root, p), p.toString)
       ShardCache.put(root, ref.name, sh)
       sh
     }
@@ -492,12 +486,7 @@ object Snapshots {
     }
 
   private def loadShards(spark: SparkSession, root: String, m: ManifestMeta): Seq[Shard] =
-    m.inline match {
-      // pre-shard manifest: its content acts as one unnamed pseudo-shard
-      case Some((files, stats)) => // pre-shard era: seconds-canon ts stats
-        Seq(Shard(ShardRef("", files.size), files, stats, tsExact = false))
-      case None => m.shardRefs.map(loadShard(spark, root, _))
-    }
+    m.shardRefs.map(loadShard(spark, root, _))
 
   private def resolve(m: ManifestMeta, shards: Seq[Shard]): Manifest = {
     // stats are recorded under PHYSICAL column names (immutable with the
@@ -702,13 +691,8 @@ object Snapshots {
   def history(spark: SparkSession, root: String): Seq[Manifest] = {
     val cache = scala.collection.mutable.HashMap.empty[String, Shard]
     historyMeta(spark, root).map { m =>
-      val shards = m.inline match {
-        case Some((files, stats)) => // pre-shard era: seconds-canon ts stats
-        Seq(Shard(ShardRef("", files.size), files, stats, tsExact = false))
-        case None => m.shardRefs.map(r =>
-          cache.getOrElseUpdate(r.name, loadShard(spark, root, r)))
-      }
-      resolve(m, shards)
+      resolve(m, m.shardRefs.map(r =>
+        cache.getOrElseUpdate(r.name, loadShard(spark, root, r))))
     }
   }
 
@@ -836,7 +820,7 @@ object Snapshots {
         }
       }) { head =>
       val parent = if (append) head else None
-      val refs = parent.map(shardRefsOf(spark, root, _)).getOrElse(Seq.empty) :+ newRef
+      val refs = parent.map(_.shardRefs).getOrElse(Seq.empty) :+ newRef
       (refs, mergedSchemaJson(parent.map(_.schema), df.schema, assigned))
     }
   }
@@ -925,7 +909,7 @@ object Snapshots {
       }
     }) { head =>
       val parent = if (append) head else None
-      val parentRefs = parent.map(shardRefsOf(spark, root, _)).getOrElse(Seq.empty)
+      val parentRefs = parent.map(_.shardRefs).getOrElse(Seq.empty)
       (parentRefs ++ refs, mergedSchemaJson(parent.map(_.schema), schema0, assigned))
     }
   }
@@ -974,7 +958,7 @@ object Snapshots {
     publishMeta(spark, root, tag = "", requireHead = headV,
       clustering = h => h.flatMap(_.clustering)) { head =>
       val h = head.getOrElse(sys.error("rename base vanished"))
-      (shardRefsOf(spark, root, h), renamed.json)
+      (h.shardRefs, renamed.json)
     }
   }
 
@@ -1023,7 +1007,7 @@ object Snapshots {
     publishMeta(spark, root, tag = "", requireHead = headV,
       clustering = h => h.flatMap(_.clustering)) { head =>
       val h = head.getOrElse(sys.error("widen base vanished"))
-      (shardRefsOf(spark, root, h), widened.json)
+      (h.shardRefs, widened.json)
     }
   }
 
@@ -1079,7 +1063,7 @@ object Snapshots {
       clustering = h =>
         h.flatMap(_.clustering).filterNot(_.cols.contains(physicalOf(field)))) { head =>
       val h = head.getOrElse(sys.error("drop base vanished"))
-      (shardRefsOf(spark, root, h), remaining.json)
+      (h.shardRefs, remaining.json)
     }
   }
 
@@ -1115,7 +1099,7 @@ object Snapshots {
     publishMeta(spark, root, tag = "", requireHead = headV,
       clustering = h => h.flatMap(_.clustering)) { head =>
       val h = head.getOrElse(sys.error("add-column base vanished"))
-      (shardRefsOf(spark, root, h), StructType(s.fields :+ field).json)
+      (h.shardRefs, StructType(s.fields :+ field).json)
     }
   }
 
@@ -1198,7 +1182,7 @@ object Snapshots {
       val schema = head.map(_.schema)
         .orElse(schemaIfNew.map(_.json))
         .getOrElse("")
-      (head.map(h => shardRefsOf(spark, root, h)).getOrElse(Seq.empty) ++ newRef,
+      (head.map(_.shardRefs).getOrElse(Seq.empty) ++ newRef,
         schema)
     })
   }
@@ -1353,20 +1337,6 @@ object Snapshots {
       (Seq(ref), if (schema.fields.isEmpty) "" else schema.json)
     }
   }
-
-  /** The parent's shard refs, materializing a pre-shard (inline) manifest
-    * into a real shard once so it can be carried by reference forever
-    * after — the lazy migration path for old tables. */
-  private[engine] def shardRefsOf(spark: SparkSession, root: String, m: ManifestMeta): Seq[ShardRef] =
-    m.inline match {
-      // pre-shard era: its TIMESTAMP stats are seconds-canon — the
-      // materialized shard must NOT carry the tsus marker (loadShards
-      // marks the same inline content tsExact=false; a marked shard here
-      // would launder seconds bounds into "exact micros")
-      case Some((files, stats)) =>
-        Seq(writeShard(spark, root, files, stats, tsExact = false))
-      case None => m.shardRefs
-    }
 
   private def mergedSchemaJson(
       parentSchema: Option[String],
@@ -2134,10 +2104,10 @@ object Snapshots {
     val missing = files.filterNot(u => known.contains(new Path(u).getName))
     val rows = knownRows ++ rowsFromFooters(spark, missing)
     val name = s"shard-${java.util.UUID.randomUUID().toString.replace("-", "").take(16)}.json"
+    val sh = Shard(ShardRef(name, files.size), files, stats, rows, blooms, dvs, tsExact)
     val out = f.create(shardPath(root, name), /*overwrite=*/ false)
-    try out.write(renderShard(files, stats, rows, blooms, dvs, tsExact)
-      .getBytes("UTF-8")) finally out.close()
-    ShardRef(name, files.size)
+    try out.write(ManifestCodec.renderShard(sh).getBytes("UTF-8")) finally out.close()
+    sh.ref
   }
 
   /** Optimistic-commit loop at the metadata level: re-derive the new
@@ -2682,8 +2652,7 @@ object Snapshots {
   /** Carry the untouched portion of `shards` forward: a shard with no
     * touched file keeps its ref (zero I/O); a shard intersecting the
     * touched set is rewritten filtered to its untouched entries (cost ∝
-    * that shard's size); a fully-touched shard drops. Pre-shard inline
-    * pseudo-shards (ref name "") always materialize. */
+    * that shard's size); a fully-touched shard drops. */
   private def carryUntouched(
       spark: SparkSession,
       root: String,
@@ -2725,7 +2694,7 @@ object Snapshots {
       touchedNames.contains(d.file) || dvUpdates.contains(d.file) ||
         dvDrop.contains(d.file)
     shards.flatMap { sh =>
-      val affected = sh.ref.name.isEmpty || sh.files.exists(touched) ||
+      val affected = sh.files.exists(touched) ||
         sh.files.exists(u => dvUpdates.contains(new Path(u).getName)) ||
         sh.dvs.exists(dvStale)
       if (!affected) Some(sh.ref)
@@ -3052,8 +3021,8 @@ object Snapshots {
             confEntries.foreach { case (k, v) => conf.set(k, v) }
             val p = new Path(s"$snapDir/$name")
             val os = p.getFileSystem(conf).create(p, false)
-            try os.write(renderShard(Seq.empty, Seq.empty, Seq.empty,
-              Seq.empty, es).getBytes("UTF-8"))
+            try os.write(ManifestCodec.renderShard(
+              Shard(ShardRef(name, 0L), Seq.empty, Seq.empty, dvs = es)).getBytes("UTF-8"))
             finally os.close()
             out += (("shard", name))
           }
@@ -3230,13 +3199,11 @@ object Snapshots {
     val refs = shards.map { sh =>
       val names = sh.files.map(u => new Path(u).getName)
       val oldRowsByName = sh.rows.map(r => r.file -> r).toMap
-      // untouched shards carry by reference — the pre-shard pseudo-shard
-      // (empty ref name) has no reference to carry and always rewrites;
-      // a shard with a count-less file rewrites too (writeShard fills the
-      // row gap from footers — metadata I/O only), so one healed pass
-      // also completes rowsComplete for the metadata COUNT surface
-      val touched = sh.ref.name.isEmpty ||
-        names.exists(n => scannedS(n) || scannedB(n)) ||
+      // untouched shards carry by reference; a shard with a count-less
+      // file rewrites (writeShard fills the row gap from footers —
+      // metadata I/O only), so one healed pass also completes
+      // rowsComplete for the metadata COUNT surface
+      val touched = names.exists(n => scannedS(n) || scannedB(n)) ||
         names.exists(n => !oldRowsByName.contains(n))
       if (!touched) sh.ref
       else {
@@ -3339,8 +3306,7 @@ object Snapshots {
     // DAYS. Round 17 changed the timestamp canon from seconds to micros;
     // new shards carry the "tsus" marker and [[resolve]] hides timestamp
     // stats from unmarked (older-binary) shards, so old tables stay
-    // readable with conservative pruning (see renderRows' compatibility
-    // note).
+    // readable with conservative pruning.
     def temporal(c: String): Boolean = fieldTypes.get(c).exists {
       case org.apache.spark.sql.types.TimestampType => true
       case org.apache.spark.sql.types.TimestampNTZType => true
@@ -4582,7 +4548,7 @@ object Snapshots {
     }
     // carry the target's shards BY REFERENCE — a restore is pure metadata,
     // O(#shards) whatever the table size
-    val refs = shardRefsOf(spark, root, target)
+    val refs = target.shardRefs
     // A restore is a CONTENT-CHANGING commit, so it must never wear the
     // row-preserving `optimize:` marker — tag-reading walkers (Incremental
     // reflectedAt, walkInterim, branch classifyChain) would skip it and
@@ -4917,11 +4883,8 @@ object Snapshots {
     // shared shards once per referencing version, O(versions × shards) small
     // reads on a long history
     val shardCache = scala.collection.mutable.HashMap.empty[String, Shard]
-    def filesOf(m: ManifestMeta): Seq[String] = m.inline match {
-      case Some((files, _)) => files
-      case None => m.shardRefs.flatMap(r =>
-        shardCache.getOrElseUpdate(r.name, loadShard(spark, root, r)).files)
-    }
+    def filesOf(m: ManifestMeta): Seq[String] = m.shardRefs.flatMap(r =>
+      shardCache.getOrElseUpdate(r.name, loadShard(spark, root, r)).files)
     // branches share data files and metadata shards with this chain by
     // reference — every OTHER chain's full retained history is live too,
     // or vacuuming main would corrupt a forked branch (and vice versa)
@@ -4957,7 +4920,7 @@ object Snapshots {
     val headV = headVersion(spark, root)
     require(headV > 0, s"no snapshot committed at $root yet")
     val meta = manifestMeta(spark, root, headV)
-    if (meta.inline.isEmpty && meta.shardRefs.size <= 1) return headV
+    if (meta.shardRefs.size <= 1) return headV
     val m = resolve(meta, loadShards(spark, root, meta))
     // known counts pass through; a legacy table's uncounted files get a
     // one-time footer backfill here (consolidation already touches all
@@ -5040,7 +5003,7 @@ object Snapshots {
     val target = manifestPath(root, m.version)
     val tmp = new Path(s"${refDir(root)}/.tmp-${java.util.UUID.randomUUID()}")
     val out = f.create(tmp, /*overwrite=*/ true)
-    try out.write(renderManifestMeta(m).getBytes("UTF-8")) finally out.close()
+    try out.write(ManifestCodec.renderManifest(m).getBytes("UTF-8")) finally out.close()
     try atomicNoReplace(f, tmp, target) finally f.delete(tmp, false)
   }
 
@@ -5053,282 +5016,4 @@ object Snapshots {
       tmp: Path,
       target: Path): Boolean =
     CommitArbiter.publish(f, tmp, target)
-
-  private def renderStats(stats: Seq[ColStats]): String =
-    stats.map { s =>
-      // string bounds rendered only when present — numeric entries (and
-      // every pre-round-15 shard) stay byte-identical
-      val str =
-        if (s.slo == null) ""
-        else s""","slo":${graft.JsonStr(s.slo)},"shi":${graft.JsonStr(s.shi)}"""
-      // sum rendered only when recorded — sum-less entries stay byte-identical
-      val sm = if (s.sumS == null) "" else s""","sum":${graft.JsonStr(s.sumS)}"""
-      // tombstone marker only when set — range entries stay byte-identical
-      // (a pre-round-19 reader's regex skips nr-bearing entries entirely:
-      // the file reads as stat-less — conservative, never wrong)
-      val nrF = if (s.nr) ""","nr":1""" else ""
-      s"""{"file":${graft.JsonStr(s.file)},"col":${graft.JsonStr(s.col)},"min":${s.min},"max":${s.max},"nulls":${s.nulls}$nrF$sm$str}"""
-    }.mkString("[", ",", "]")
-
-  private def renderRows(rows: Seq[FileRows]): String =
-    // "b" only when known — earlier-era shard bodies stay byte-identical.
-    // COMPATIBILITY IS ONE-WAY (by design): this binary reads every
-    // earlier shard generation SAFELY — a pre-round-16 shard has no "b"
-    // sizes (byte pacing degrades to admit-alone), and a pre-round-17
-    // shard has no "tsus" marker, so [[resolve]] hides its seconds-canon
-    // timestamp stats (those columns read as stat-less: must-scan,
-    // conservative — degrade, never lie). The reverse direction is the
-    // one-way part: a PRE-round-16 reader's rows regex required
-    // `"n":(\d+)}` immediately before the brace and silently parses ZERO
-    // row entries from a "b"-bearing shard (degrading rowCount/countWhere/
-    // aggregate pushdown, never wrong answers), and a pre-round-17 reader
-    // would compare micros stats against seconds literals (wrong answers)
-    // — mixed-version deployments upgrade readers before writers.
-    rows.map(r => s"""{"file":${graft.JsonStr(r.file)},"n":${r.n}""" +
-        (if (r.bytes >= 0L) s""","b":${r.bytes}}""" else "}"))
-      .mkString("[", ",", "]")
-
-  /** Shard body: one immutable file list + its stats + per-file row counts.
-    * files LAST: the parser anchors its greedy bracket match on the final
-    * array, so file arrays never need nested-structure parsing. */
-  private def renderBlooms(blooms: Seq[FileBloom]): String =
-    blooms.map(b =>
-      s"""{"file":${graft.JsonStr(b.file)},"col":${graft.JsonStr(b.col)},"b64":${graft.JsonStr(b.b64)}}""")
-      .mkString("[", ",", "]")
-
-  private def renderDvs(dvs: Seq[FileDv]): String =
-    dvs.map(d =>
-      s"""{"file":${graft.JsonStr(d.file)},"dv64":${graft.JsonStr(d.b64)},"del":${d.deleted}}""")
-      .mkString("[", ",", "]")
-
-  private def renderShard(files: Seq[String], stats: Seq[ColStats],
-      rows: Seq[FileRows], blooms: Seq[FileBloom] = Seq.empty,
-      dvs: Seq[FileDv] = Seq.empty,
-      // the round-17 timestamp-canon marker; a METADATA REWRITE of an old
-      // shard must pass the SOURCE shard's flag, or seconds-era stats
-      // would launder into "exact micros"
-      tsExact: Boolean = true): String = {
-    // blooms/dvs rendered only when present — earlier-era shards stay byte-identical
-    val bl = if (blooms.isEmpty) "" else s""""blooms":${renderBlooms(blooms)},"""
-    val dv = if (dvs.isEmpty) "" else s""""dvs":${renderDvs(dvs)},"""
-    val ts = if (tsExact) """"tsus":true,""" else ""
-    s"""{"stats":${renderStats(stats)},"rows":${renderRows(rows)},$bl$dv$ts"files":${files.map(graft.JsonStr(_)).mkString("[", ",", "]")}}"""
-  }
-
-  private def renderManifestMeta(m: ManifestMeta): String = {
-    val shards = m.shardRefs.map(r =>
-      s"""{"name":${graft.JsonStr(r.name)},"n":${r.n}}""").mkString("[", ",", "]")
-    // retired (dropped columns' physical names) rendered only when present —
-    // pre-evolution manifests stay byte-compatible
-    val retired =
-      if (m.retired.isEmpty) ""
-      else s""","retired":${m.retired.map(graft.JsonStr(_)).mkString("[", ",", "]")}"""
-    // optional like retired: unclustered manifests stay byte-compatible
-    val clustering = m.clustering.fold("")(c => {
-      // single-key specs keep the legacy "col" form byte-identical;
-      // composite keys (round 15) render a "cols" array
-      val key =
-        if (c.cols.length == 1) s""""col":${graft.JsonStr(c.cols.head)}"""
-        else s""""cols":${c.cols.map(graft.JsonStr(_)).mkString("[", ",", "]")}"""
-      s""","clustering":{$key,"buckets":${c.buckets}""" +
-        (if (c.sorted) ""","sorted":true}""" else "}")
-    })
-    // optional like retired: pre-indexed manifests stay byte-compatible
-    val indexed = m.indexed.fold("") { case (s, b) =>
-      s""","indexed":{"s":${s.map(graft.JsonStr(_)).mkString("[", ",", "]")},"b":${b.map(graft.JsonStr(_)).mkString("[", ",", "]")}}"""
-    }
-    s"""{"version":${m.version},"parent":${m.parent},"ts":${m.ts},"tag":${graft.JsonStr(m.tag)},"schema":${graft.JsonStr(m.schema)},"shards":$shards$retired$clustering$indexed}"""
-  }
-
-  private def parseFilesArray(text: String, what: String): Seq[String] = {
-    val files = """"files":\[(.*)\]""".r.findFirstMatchIn(text)
-      .map(_.group(1)).getOrElse(sys.error(s"bad $what: missing files in $text"))
-    if (files.trim.isEmpty) Seq.empty[String]
-    else """"([^"\\]*(?:\\.[^"\\]*)*)"""".r.findAllMatchIn(files)
-      .map(m => unescape(m.group(1))).toSeq
-  }
-
-  private def parseStatsArray(text: String): Seq[ColStats] = {
-    val num = """-?[0-9.eE+-]+"""
-    val str = """"([^"\\]*(?:\\.[^"\\]*)*)""""
-    // "nulls" optional: pre-round-8 shards lack it → -1 (unknown);
-    // "sum" optional: scan-collected entries only (round 17, plain decimal
-    // string — never escaped); "slo"/"shi" optional: string-column entries
-    // only (round 15)
-    // "nr" optional: the round-19 no-range tombstone; "sum" accepts the
-    // "!" sentinel (tried, unrecordable) alongside plain decimal strings
-    ("""\{"file":"([^"\\]*(?:\\.[^"\\]*)*)","col":"([^"\\]*(?:\\.[^"\\]*)*)","min":(""" + num +
-      """),"max":(""" + num + """)(?:,"nulls":(-?\d+))?(?:,"nr":(1))?(?:,"sum":"([-0-9.!]+)")?(?:,"slo":""" + str +
-      ""","shi":""" + str + """)?\}""").r
-      .findAllMatchIn(text).map { g =>
-        ColStats(unescape(g.group(1)), unescape(g.group(2)),
-          g.group(3).toDouble, g.group(4).toDouble,
-          Option(g.group(5)).map(_.toLong).getOrElse(-1L),
-          Option(g.group(8)).map(unescape).orNull,
-          Option(g.group(9)).map(unescape).orNull,
-          sumS = g.group(7),
-          nr = g.group(6) != null)
-      }.toSeq
-  }
-
-  /** Per-file row-count entries. Shape-anchored on `"file"` + `"n"` (stats
-    * entries carry `"col"` right after `"file"`, manifest shard refs use
-    * `"name"` — no cross-match); absent in pre-round-8 shards → empty. */
-  private def parseRowsArray(text: String): Seq[FileRows] =
-    """\{"file":"([^"\\]*(?:\\.[^"\\]*)*)","n":(\d+)(?:,"b":(\d+))?\}""".r
-      .findAllMatchIn(text)
-      .map(g => FileRows(unescape(g.group(1)), g.group(2).toLong,
-        Option(g.group(3)).map(_.toLong).getOrElse(-1L))).toSeq
-
-  /** Bloom entries, shape-anchored on the `"b64"` key (stats carry
-    * `"min"`, rows carry `"n"` — no cross-match). Absent pre-round-9.
-    * NOTE every string-token pattern in these parsers is the UNROLLED-LOOP
-    * form `[^"\\]*(?:\\.[^"\\]*)*`, not the naive `(?:[^"\\]|\\.)*`: the
-    * alternation-under-star shape makes Java's regex engine recurse once
-    * per character, and a kilobyte-scale token (a bloom's base64, a wide
-    * schema json) overflows the thread stack; the unrolled form matches
-    * the identical language but runs the common char-class span
-    * iteratively, recursing only per escape. */
-  private def parseBloomsArray(text: String): Seq[FileBloom] =
-    ("""\{"file":"([^"\\]*(?:\\.[^"\\]*)*)","col":"([^"\\]*(?:\\.[^"\\]*)*)","b64":"([^"\\]*(?:\\.[^"\\]*)*)"\}""").r
-      .findAllMatchIn(text)
-      .map(g => FileBloom(unescape(g.group(1)), unescape(g.group(2)), unescape(g.group(3))))
-      .toSeq
-
-  /** Deletion-vector entries, shape-anchored on the `"dv64"` key (blooms
-    * carry `"b64"`, stats `"min"`, rows `"n"` — no cross-match). Absent
-    * before round 9's merge-on-read deletes. */
-  private def parseDvsArray(text: String): Seq[FileDv] =
-    ("""\{"file":"([^"\\]*(?:\\.[^"\\]*)*)","dv64":"([^"\\]*(?:\\.[^"\\]*)*)","del":(\d+)\}""").r
-      .findAllMatchIn(text)
-      .map(g => FileDv(unescape(g.group(1)), unescape(g.group(2)), g.group(3).toLong))
-      .toSeq
-
-  private def parseShard(text: String)
-      : (Seq[String], Seq[ColStats], Seq[FileRows], Seq[FileBloom], Seq[FileDv], Boolean) =
-    (parseFilesArray(text, "shard"), parseStatsArray(text), parseRowsArray(text),
-      parseBloomsArray(text), parseDvsArray(text),
-      // round-17 marker: absent => the shard's TIMESTAMP stats are rounded
-      // seconds (older binary) and must not be compared against micros
-      text.contains("\"tsus\":true"))
-
-  /** Minimal parser for the exact shapes renderManifestMeta emits — and,
-    * for pre-shard tables, the legacy inline form (files+stats in the
-    * manifest itself), surfaced via `inline`. No json library in the
-    * classpath contract, same stance as JsonStr on the write side. */
-  private def parseManifestMeta(text: String): ManifestMeta = {
-    def longField(key: String): Long =
-      s""""$key":(-?\\d+)""".r.findFirstMatchIn(text)
-        .map(_.group(1).toLong)
-        .getOrElse(sys.error(s"bad manifest: missing $key in $text"))
-    val tag = """"tag":"([^"\\]*(?:\\.[^"\\]*)*)"""".r.findFirstMatchIn(text)
-      .map(m => unescape(m.group(1))).getOrElse("")
-    // optional: pre-ts manifests read as ts=0 (always readAsOf-eligible)
-    val ts = """"ts":(-?\d+)""".r.findFirstMatchIn(text)
-      .map(_.group(1).toLong).getOrElse(0L)
-    // optional: pre-schema manifests read as "" (reads fall back to footers)
-    val schema = """"schema":"([^"\\]*(?:\\.[^"\\]*)*)"""".r.findFirstMatchIn(text)
-      .map(m => unescape(m.group(1))).getOrElse("")
-    // optional: pre-evolution manifests carry no retired list
-    val retired = stringArrayAfter(text, """"retired":""").getOrElse(Seq.empty)
-    // optional: pre-clustering manifests read as None (unclustered).
-    // Composite keys (round 15) carry a quote-aware "cols" array; the
-    // legacy single-key "col" form parses as before.
-    val clustering = {
-      val multi = {
-        val at = text.indexOf(""""clustering":{"cols":""")
-        if (at < 0) None
-        else for {
-          (cols, after) <- stringArrayAt(text, at + """"clustering":{"cols":""".length)
-          bm <- """^,"buckets":(\d+)(,"sorted":true)?\}""".r
-            .findFirstMatchIn(text.substring(after))
-        } yield Clustering(cols, bm.group(1).toInt, sorted = bm.group(2) != null)
-      }
-      multi.orElse(
-        """"clustering":\{"col":"([^"\\]*(?:\\.[^"\\]*)*)","buckets":(\d+)(,"sorted":true)?\}""".r
-          .findFirstMatchIn(text)
-          .map(g => Clustering(Seq(unescape(g.group(1))), g.group(2).toInt,
-            sorted = g.group(3) != null)))
-    }
-    // optional: pre-indexed manifests read as None (appendFiles resolves)
-    val indexed = {
-      val at = text.indexOf(""""indexed":{"s":""")
-      if (at < 0) None
-      else for {
-        (s, afterS) <- stringArrayAt(text, at + """"indexed":{"s":""".length)
-        bAt = text.indexOf(""""b":""", afterS) if bAt >= 0
-        (b, _) <- stringArrayAt(text, bAt + """"b":""".length)
-      } yield (s, b)
-    }
-    val shardsField = """"shards":\[(.*?)\]""".r.findFirstMatchIn(text).map(_.group(1))
-    shardsField match {
-      case Some(body) =>
-        val refs = """\{"name":"([^"\\]*(?:\\.[^"\\]*)*)","n":(\d+)\}""".r
-          .findAllMatchIn(body)
-          .map(g => ShardRef(unescape(g.group(1)), g.group(2).toLong)).toSeq
-        ManifestMeta(longField("version"), longField("parent"), refs, tag, ts, schema,
-          retired = retired, clustering = clustering, indexed = indexed)
-      case None => // legacy inline manifest
-        ManifestMeta(longField("version"), longField("parent"), Seq.empty, tag, ts, schema,
-          retired = retired,
-          inline = Some((parseFilesArray(text, "manifest"), parseStatsArray(text))),
-          clustering = clustering, indexed = indexed)
-    }
-  }
-
-  /** Parse the `["a","b",...]` string array whose `[` sits at `text(at)`,
-    * QUOTE-AWARE: a `]` inside a quoted element (a physical column name
-    * containing a bracket) never terminates the array early — the failure
-    * mode of the old non-greedy `\[(.*?)\]` capture, which silently
-    * mis-declared the indexed columns for every subsequent epoch. Returns
-    * (elements, index just past the closing `]`); None when `text(at)` is
-    * not `[` or the array never closes (malformed → caller treats as
-    * absent, the conservative read). */
-  private def stringArrayAt(text: String, at: Int): Option[(Seq[String], Int)] = {
-    if (at < 0 || at >= text.length || text.charAt(at) != '[') return None
-    val out = Seq.newBuilder[String]
-    var i = at + 1
-    while (i < text.length) {
-      text.charAt(i) match {
-        case ']' => return Some((out.result(), i + 1))
-        case '"' =>
-          val sb = new StringBuilder
-          i += 1
-          while (i < text.length && text.charAt(i) != '"') {
-            if (text.charAt(i) == '\\' && i + 1 < text.length) {
-              sb.append(text.charAt(i)).append(text.charAt(i + 1)); i += 2
-            } else { sb.append(text.charAt(i)); i += 1 }
-          }
-          if (i >= text.length) return None // unterminated string
-          out += unescape(sb.toString); i += 1
-        case _ => i += 1 // separators/whitespace
-      }
-    }
-    None // unterminated array
-  }
-
-  /** First `<marker>["..."]` string array in `text`, quote-aware. */
-  private def stringArrayAfter(text: String, marker: String): Option[Seq[String]] = {
-    val at = text.indexOf(marker)
-    if (at < 0) None else stringArrayAt(text, at + marker.length).map(_._1)
-  }
-
-  private[engine] def unescape(s: String): String = {
-    val sb = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case 'n' => sb.append('\n'); i += 2
-          case 't' => sb.append('\t'); i += 2
-          case 'r' => sb.append('\r'); i += 2
-          case 'u' =>
-            sb.append(Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar); i += 6
-          case other => sb.append(other); i += 2
-        }
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
-  }
 }

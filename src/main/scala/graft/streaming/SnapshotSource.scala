@@ -20,7 +20,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.sql.vectorized.ColumnarBatch
 
-import graft.engine.Snapshots
+import graft.engine.{ManifestCodec, Snapshots}
 
 /** DataSource-V2 TABLE over a snapshot table — batch AND streaming reads
   * through one provider, so the manifest index stops being an API-only
@@ -1352,7 +1352,7 @@ private[streaming] class SnapshotScan(
 
 /** Offset = snapshot VERSION: "every commit ≤ version is consumed". */
 private[streaming] case class SnapshotOffset(version: Long) extends Offset {
-  override def json(): String = s"""{"version":$version}"""
+  override def json(): String = ManifestCodec.renderOffset(version)
 }
 
 private[streaming] class SnapshotMicroBatchStream(
@@ -1433,24 +1433,20 @@ private[streaming] class SnapshotMicroBatchStream(
         // version, conservative), so old tables still make progress.
         var v = from
         var budget: Long = mb.maxBytes()
-        def refsOf(mm: Snapshots.ManifestMeta): Option[Seq[Snapshots.ShardRef]] =
-          if (mm.inline.isDefined) None else Some(mm.shardRefs)
-        var prevRefs: Option[Set[String]] =
-          if (from == 0) Some(Set.empty)
-          else refsOf(Snapshots.manifestMeta(spark, root, from))
-            .map(_.map(_.name).toSet)
+        var prevRefs: Set[String] =
+          if (from == 0) Set.empty
+          else Snapshots.manifestMeta(spark, root, from).shardRefs.map(_.name).toSet
         var prevFiles: Option[Set[String]] =
           if (from == 0) Some(Set.empty) else None
         var done = false
         while (!done && v < head) {
-          val mm = Snapshots.manifestMeta(spark, root, v + 1)
-          val curRefs = refsOf(mm)
-          val bytes: Long = (prevRefs, curRefs) match {
-            case (Some(p), Some(c)) if p.subsetOf(c.map(_.name).toSet) =>
+          val curRefs = Snapshots.manifestMeta(spark, root, v + 1).shardRefs
+          val bytes: Long =
+            if (prevRefs.subsetOf(curRefs.map(_.name).toSet)) {
               prevFiles = None // cached file set no longer describes v+1
               Snapshots.shardFileBytes(spark, root,
-                c.filterNot(r => p.contains(r.name)))
-            case _ =>
+                curRefs.filterNot(r => prevRefs.contains(r.name)))
+            } else {
               val pf = prevFiles.getOrElse(
                 if (v == 0) Set.empty[String]
                 else Snapshots.manifest(spark, root, v).files.toSet)
@@ -1462,11 +1458,11 @@ private[streaming] class SnapshotMicroBatchStream(
                 // carry duplicate basenames — each file's bytes must count
                 added.toSeq.map(u => new Path(u).getName),
                 m1.rows.iterator.map(r => r.file -> r.bytes).toMap)
-          }
+            }
           if (bytes <= budget || v == from) {
             // always admit at least one version, else no progress
             budget = math.max(0L, budget - bytes)
-            prevRefs = curRefs.map(_.map(_.name).toSet)
+            prevRefs = curRefs.map(_.name).toSet
             v += 1
           } else done = true
         }
@@ -1481,30 +1477,28 @@ private[streaming] class SnapshotMicroBatchStream(
         // (compaction/merge/delete) load full file lists, lazily.
         var v = from
         var budget: Long = mf.maxFiles().toLong
-        def shardsOf(mm: Snapshots.ManifestMeta): Option[Map[String, Long]] =
-          if (mm.inline.isDefined) None
-          else Some(mm.shardRefs.map(r => r.name -> r.n).toMap)
-        var prevShards: Option[Map[String, Long]] =
-          if (from == 0) Some(Map.empty)
+        def shardsOf(mm: Snapshots.ManifestMeta): Map[String, Long] =
+          mm.shardRefs.map(r => r.name -> r.n).toMap
+        var prevShards: Map[String, Long] =
+          if (from == 0) Map.empty
           else shardsOf(Snapshots.manifestMeta(spark, root, from))
         var prevFiles: Option[Set[String]] =
           if (from == 0) Some(Set.empty) else None
         var done = false
         while (!done && v < head) {
-          val mm = Snapshots.manifestMeta(spark, root, v + 1)
-          val curShards = shardsOf(mm)
-          val addedCount: Long = (prevShards, curShards) match {
-            case (Some(p), Some(c)) if p.keySet.subsetOf(c.keySet) =>
+          val curShards = shardsOf(Snapshots.manifestMeta(spark, root, v + 1))
+          val addedCount: Long =
+            if (prevShards.keySet.subsetOf(curShards.keySet)) {
               prevFiles = None // cached file set no longer describes v+1
-              (c.keySet -- p.keySet).iterator.map(c).sum
-            case _ =>
+              (curShards.keySet -- prevShards.keySet).iterator.map(curShards).sum
+            } else {
               val pf = prevFiles.getOrElse(
                 if (v == 0) Set.empty[String]
                 else Snapshots.manifest(spark, root, v).files.toSet)
               val nf = Snapshots.manifest(spark, root, v + 1).files.toSet
               prevFiles = Some(nf)
               (nf -- pf).size.toLong
-          }
+            }
           if (addedCount <= budget || v == from) {
             // always admit at least one version, else no progress
             budget -= addedCount
@@ -1518,9 +1512,7 @@ private[streaming] class SnapshotMicroBatchStream(
   }
 
   override def deserializeOffset(json: String): Offset =
-    SnapshotOffset(""""version":(\d+)""".r.findFirstMatchIn(json)
-      .map(_.group(1).toLong)
-      .getOrElse(sys.error(s"bad snapshot-stream offset: $json")))
+    SnapshotOffset(ManifestCodec.parseOffset(json))
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val fromV = start.asInstanceOf[SnapshotOffset].version
@@ -1598,23 +1590,16 @@ private[streaming] class SnapshotMicroBatchStream(
         val m = Snapshots.manifest(spark, root, v)
         (m.files.toSet, m.dvs.map(d => d.file -> d.b64).toMap)
       }
-    // shard-ref names of the previous commit; None for pre-shard (inline)
-    // manifests, which are ineligible for the cheap path
-    def shardsOf(mm: Snapshots.ManifestMeta): Option[Set[String]] =
-      if (mm.inline.isDefined) None else Some(mm.shardRefs.map(_.name).toSet)
-    var prevShards: Option[Set[String]] =
-      if (fromV == 0) Some(Set.empty)
+    def shardsOf(mm: Snapshots.ManifestMeta): Set[String] = mm.shardRefs.map(_.name).toSet
+    var prevShards: Set[String] =
+      if (fromV == 0) Set.empty
       else shardsOf(Snapshots.manifestMeta(spark, root, fromV))
     var v = fromV
     while (v < toV) {
       v += 1
       val mm = Snapshots.manifestMeta(spark, root, v)
       val curShards = shardsOf(mm)
-      val pureAppend = (prevShards, curShards) match {
-        case (Some(p), Some(c)) => p.subsetOf(c)
-        case _ => false
-      }
-      if (pureAppend) {
+      if (prevShards.subsetOf(curShards)) {
         // every parent shard carried by reference: nothing removed, no DV
         // changed — preSpan unchanged. The cached full state no longer
         // describes v; drop it (recomputed on demand).
